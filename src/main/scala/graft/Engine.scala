@@ -1,5 +1,9 @@
 package graft
 
+import java.net.URI
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.sql.SparkSession
 
 /** Session factory — the engine's `connect` analogue (reference:
@@ -17,8 +21,36 @@ import org.apache.spark.sql.SparkSession
   *     (a local harness wants cores, not the 200 default; a cluster
   *     deployment would size to ~2-3x total executor cores or rely on
   *     AQE coalescing).
+  *   - the in-process local filesystem (`LocalFs.scala`) for every
+  *     `file:` path, so local writes do not fork `chmod`/`readlink`.
   */
 object Engine {
+
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** Hadoop settings that route `file:` paths, through `FileSystem` and
+    * `FileContext` alike, to [[GraftLocalFileSystem]] / [[GraftLocalFs]].
+    */
+  val LocalFsConf: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[GraftLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[GraftLocalFs].getName)
+
+  /** Why the session's `file:` filesystem is not [[GraftLocalFileSystem]],
+    * if it is not. `spark.hadoop.*` is applied only when the SparkContext
+    * is created, and Hadoop's FileSystem cache ignores the impl class, so
+    * either cause silently keeps the forking local filesystem.
+    */
+  def localFsWarning(fs: FileSystem, hadoopConf: Configuration): Option[String] =
+    if (fs.isInstanceOf[GraftLocalFileSystem]) None
+    else {
+      val cause =
+        if (hadoopConf.get("fs.file.impl") != classOf[GraftLocalFileSystem].getName)
+          "the SparkContext existed before this session was configured"
+        else "a file: FileSystem was cached in this JVM before the session started"
+      Some(s"local filesystem is ${fs.getClass.getName}, not " +
+        s"${classOf[GraftLocalFileSystem].getName}: $cause; without " +
+        "libhadoop it forks chmod for every local file and directory created")
+    }
 
   def session(master: String, shufflePartitions: Int): SparkSession = {
     val s = SparkSession.builder()
@@ -34,8 +66,12 @@ object Engine {
       // Spark-native form of the classic bloom-prune pattern.
       .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
       .config("spark.ui.enabled", "false")
+      .config(LocalFsConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    val hadoopConf = s.sparkContext.hadoopConfiguration
+    localFsWarning(FileSystem.get(new URI("file:///"), hadoopConf), hadoopConf)
+      .foreach(w => log.warn(w))
     s
   }
 

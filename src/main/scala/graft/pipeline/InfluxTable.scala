@@ -10,6 +10,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
@@ -169,6 +170,9 @@ final class InfluxWriteBuilder(schema: StructType, seriesDir: String,
   }
 
   override def build(): Write = new Write {
+    override def supportedCustomMetrics(): Array[CustomMetric] =
+      Array(new InfluxRowsWritten)
+
     override def toBatch: BatchWrite =
       new InfluxBatchWrite(schema, seriesDir, measurement, timeCol,
         insertLimit, truncateFirst, makeTransport())
@@ -183,6 +187,26 @@ final class InfluxWriteBuilder(schema: StructType, seriesDir: String,
     override def toStreaming: streaming.StreamingWrite =
       new InfluxStreamingWrite(schema, seriesDir, measurement, timeCol,
         insertLimit, truncateFirst, makeTransport())
+  }
+}
+
+/** Rows a graft-influx write task rendered. A DSv2 writer has no
+  * `outputMetrics.recordsWritten`, so the count travels as this custom
+  * metric; [[ProgressListener]] finds it among a task's accumulables by
+  * its description.
+  */
+final class InfluxRowsWritten extends CustomSumMetric {
+  override def name(): String = InfluxRowsWritten.Name
+  override def description(): String = InfluxRowsWritten.Description
+}
+
+object InfluxRowsWritten {
+  val Name = "rowsWritten"
+  val Description = "graft-influx rows written"
+
+  def value(rows: Long): CustomTaskMetric = new CustomTaskMetric {
+    override def name(): String = Name
+    override def value(): Long = rows
   }
 }
 
@@ -577,6 +601,9 @@ final class InfluxDataWriter(schema: StructType, seriesDir: String,
     if (transport.staged) InfluxCommit(attemptDir, names.toSeq, rows)
     else InfluxCommit("", Nil, rows)
   }
+
+  override def currentMetricsValues(): Array[CustomTaskMetric] =
+    Array(InfluxRowsWritten.value(rows))
 
   override def abort(): Unit = {
     buf.clear()

@@ -17,8 +17,10 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *
   * Attribution uses the job description set by `Pipeline.migrate`
   * ("migrate <table>"), the idiomatic listener-side channel for job
-  * identity. Kept deliberately thin (SURVEY.md §2 row 11: observability,
-  * not a correctness surface): no TUI, no ring-buffer log — callers render.
+  * identity. Rows come from `outputMetrics.recordsWritten` (file sinks)
+  * or the graft-influx writer's rows-written custom metric. Kept
+  * deliberately thin (SURVEY.md §2 row 11: observability, not a
+  * correctness surface): no TUI, no ring-buffer log — callers render.
   */
 final class ProgressListener extends SparkListener {
 
@@ -60,13 +62,24 @@ final class ProgressListener extends SparkListener {
 
   override def onTaskEnd(taskEnd: SparkListenerTaskEnd): Unit = {
     val written = Option(taskEnd.taskMetrics)
-      .map(_.outputMetrics.recordsWritten).getOrElse(0L)
+      .map(_.outputMetrics.recordsWritten).getOrElse(0L) match {
+      case 0L => influxRowsWritten(taskEnd)
+      case n => n
+    }
     if (written > 0) {
       Option(stageTable.get(taskEnd.stageId)).foreach { table =>
         state.computeIfPresent(table, (_, v) => (v._1 + written, v._2))
       }
     }
   }
+
+  /** DSv2 writers leave `recordsWritten` at 0; the graft-influx writer
+    * reports its rows as the [[InfluxRowsWritten]] custom metric instead.
+    */
+  private def influxRowsWritten(taskEnd: SparkListenerTaskEnd): Long =
+    Option(taskEnd.taskInfo).iterator.flatMap(_.accumulables)
+      .find(_.name.contains(InfluxRowsWritten.Description))
+      .flatMap(_.update).collect { case n: Long => n }.getOrElse(0L)
 
   /** Per-table (rowsWritten, rowsPerSec) since first task. */
   def snapshot(): Map[String, (Long, Double)] =

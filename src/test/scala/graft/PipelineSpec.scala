@@ -197,6 +197,32 @@ class PipelineSpec extends SparkSpec {
     // sink got exactly the written rows
     assert(spark.read.parquet(s"$sinkDir/events").count() === 1)
   }
+
+  test("ProgressListener counts LineProtocolSink rows: snapshot equals the ledger") {
+    val t = Timestamp.valueOf("2024-01-01 00:00:00")
+    val dir = Files.createTempDirectory("graft_src_").toString
+    import spark.implicits._
+    (1 to 230).map(i => (i.toLong, if (i % 7 == 0) None else Some(t), i.toDouble))
+      .toDF("event_id", "ts", "value").repartition(3)
+      .write.parquet(s"$dir/events.parquet")
+    (1 to 40).map(i => (i.toLong, t)).toDF("id", "time")
+      .write.parquet(s"$dir/ticks.parquet")
+    Seq((1L, "y")).toDF("id", "v").write.parquet(s"$dir/plain.parquet")
+    val sinkDir = Files.createTempDirectory("graft_sink_").toString
+    val listener = new ProgressListener().register(spark)
+    try {
+      val ledger = Pipeline.migrate(spark, dir, new LineProtocolSink(sinkDir, 10),
+        Pipeline.defaultPrepare).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(ledger === Map("events" -> 198L, "ticks" -> 40L, "plain" -> 0L))
+      // listener events arrive asynchronously: poll until they match
+      def rows = listener.snapshot().map { case (k, v) => k -> v._1 }
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (ledger.exists { case (k, n) => rows.getOrElse(k, 0L) != n } &&
+          System.nanoTime() < deadline) Thread.sleep(50)
+      ledger.foreach { case (k, n) => assert(rows.getOrElse(k, 0L) === n, k) }
+    } finally listener.unregister(spark)
+  }
 }
 
 object PipelineSpec {
